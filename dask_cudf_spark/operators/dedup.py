@@ -520,8 +520,8 @@ def connected_components(
       attempt task stops reading at the cap, and loose-threshold
       corpora that trip it do so deterministically (same measured
       count), never flapping.  Interleaved same-session A/B
-      (scripts/ab_minhash_r16.py): probe-job shape 2.05 s min vs
-      one-job shape 1.23-1.3 s at sf0.1.
+      (OPTIMIZATION_r16.md §2, bench_local_r16/ab_minhash*.txt):
+      probe-job shape 2.05 s min vs one-job shape 1.23-1.3 s at sf0.1.
     - **Large graphs**: the distributed loop.  Each iteration: every
       node takes min(own label, neighbors' labels) — one shuffle join +
       one aggregation; converges in O(graph diameter) iterations
@@ -542,11 +542,13 @@ def connected_components(
     """
     # node ids are type-generic (long doc ids, string urls, ...): both
     # paths carry the source dtype through — cast dst to src's type so
-    # the union/least coercions below are exact
+    # the union/least coercions below are exact.  An edge with a NULL
+    # endpoint joins nothing, so it is dropped up front: both paths
+    # then agree, and a null node can only be the overflow sentinel
     node_type = edges.schema[src].dataType
     e = edges.select(
         F.col(src).alias("n"), F.col(dst).cast(node_type).alias("m")
-    )
+    ).where(F.col("n").isNotNull() & F.col("m").isNotNull())
 
     # round-4 leak fix, generalized: unpersist the PREVIOUS call's
     # caches so a long session holds one call's worth, never one per
@@ -632,9 +634,9 @@ def _cc_local_unionfind(
     local/distributed switch.  The task counts edges as it streams;
     past ``cap`` it stops reading and emits a single all-null sentinel
     row instead of a result (legitimate output rows are never null —
-    nodes come from non-null edge endpoints), telling the caller to
-    fall back to the distributed loop without a dedicated count-probe
-    job."""
+    connected_components drops null-endpoint edges), telling the
+    caller to fall back to the distributed loop without a dedicated
+    count-probe job."""
     import pandas as pd  # noqa: PLC0415 — worker-side import
 
     def uf(batches):

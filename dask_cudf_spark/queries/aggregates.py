@@ -3106,7 +3106,6 @@ def q_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the full/incremental/incremental mode sequence is preserved
     by construction, not by timing."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..sources.matview import read_matview, refresh_matview
     from ..sources.txlog import commit, stage_commit_data
@@ -3127,19 +3126,12 @@ def q_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = F.col("event_id") % 3
     parts = [ev.filter(lo == p) for p in range(3)]
     modes = []
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(stage_commit_data, parts[0], src)
-        for part in range(3):
-            staged = fut.result()
-            fut = (
-                pool.submit(stage_commit_data, parts[part + 1], src)
-                if part + 1 < 3
-                else None
-            )
-            commit(parts[part], src, "append", staged_dir=staged)
-            modes.append(
-                refresh_matview(spark, src, dst, ["event_type"], aggs)
-            )
+    staged = stage_commit_data(parts[0], src)
+    for part in range(3):
+        nxt = stage_commit_data(parts[part + 1], src) if part < 2 else None
+        commit(parts[part], src, "append", staged=staged)
+        modes.append(refresh_matview(spark, src, dst, ["event_type"], aggs))
+        staged = nxt
     if [m["mode"] for m in modes] != ["full", "incremental", "incremental"]:
         raise AssertionError(f"incrementality lost: {modes}")
     return read_matview(spark, dst).select(
@@ -3198,7 +3190,6 @@ def q_txlog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer shuffle join on the key — churn-proportional CDC, never
     a full-table diff."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..sources.txlog import (
         change_feed,
@@ -3226,14 +3217,11 @@ def q_txlog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # overlap the two independent data writes (r16, guide §2.6): the
     # merge's updates dir depends only on `od`, not on the log, so it
-    # stages from a driver thread while the v0 base commit writes; the
-    # merge's LOG record still lands strictly after v0's (merge_by_key
-    # is only called once both are done)
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(stage_commit_data, updates, path)
-        commit(od.filter(F.col("o_orderkey") % 5 != 4), path, "append")  # v0
-        upd_dir = fut.result()
-    v1 = merge_by_key(updates, path, "o_orderkey", staged_dir=upd_dir)
+    # stages on txlog's driver thread while the v0 base commit writes;
+    # the merge's LOG record still lands strictly after v0's
+    staged = stage_commit_data(updates, path)
+    commit(od.filter(F.col("o_orderkey") % 5 != 4), path, "append")  # v0
+    v1 = merge_by_key(updates, path, "o_orderkey", staged=staged)
     return change_feed(
         spark, path, "o_orderkey", from_version=0, to_version=v1
     )
@@ -3267,7 +3255,6 @@ def q_matview_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB a merge touching 0.1% of files costs 0.1% of a rebuild,
     where the previous fallback re-aggregated the whole table."""
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..sources.matview import read_matview, refresh_matview
     from ..sources.txlog import commit, merge_by_key, stage_commit_data
@@ -3290,18 +3277,16 @@ def q_matview_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # overlap (r16, guide §2.6): the merge's updates dir depends only
-    # on `od`, so it stages from a driver thread while the base commit
-    # writes AND the first (full) refresh runs; the merge's log record
-    # lands strictly after refresh #1 read the src log (merge_by_key is
-    # called only after m0 returned), so the full->cdc mode sequence is
-    # preserved by construction
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(stage_commit_data, updates, src)
-        commit(od.filter(F.col("o_orderkey") % 5 != 4), src, "append")
-        m0 = refresh_matview(spark, src, dst, ["o_orderstatus"], aggs,
-                             key="o_orderkey")
-        upd_dir = fut.result()
-    merge_by_key(updates, src, "o_orderkey", staged_dir=upd_dir)
+    # on `od`, so it stages on txlog's driver thread while the base
+    # commit writes AND the first (full) refresh runs; the merge's log
+    # record lands strictly after refresh #1 read the src log
+    # (merge_by_key is called only after m0 returned), so the
+    # full->cdc mode sequence is preserved by construction
+    staged = stage_commit_data(updates, src)
+    commit(od.filter(F.col("o_orderkey") % 5 != 4), src, "append")
+    m0 = refresh_matview(spark, src, dst, ["o_orderstatus"], aggs,
+                         key="o_orderkey")
+    merge_by_key(updates, src, "o_orderkey", staged=staged)
     m1 = refresh_matview(spark, src, dst, ["o_orderstatus"], aggs,
                          key="o_orderkey")
     if [m0["mode"], m1["mode"]] != ["full", "cdc"]:

@@ -9,7 +9,9 @@ Layout:
     <table>/_txlog/<version 12-digit>.json      one commit record each
 
 A commit record is ``{"version": N, "op": "append"|"overwrite",
-"dirs": [<data subdirs THIS commit added>]}``.  A reader replays the
+"dirs": [<data subdirs>], "batch_id": ..., "stats": "<json>"}``
+(``dirs`` is what an append adds or an overwrite makes live; every
+writer publishes through ``_publish``).  A reader replays the
 log in version order: ``overwrite`` resets the live set, ``append``
 extends it — so a read at version V sees exactly the committed state
 at V (snapshot isolation: concurrent writers never mutate files a
@@ -32,31 +34,32 @@ path list, keeping partition pruning and pushdown intact.
 from __future__ import annotations
 
 import json
+import os
 import random
 import time
 import urllib.parse
 import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 def _race_backoff(attempt: int) -> None:
     """Sleep briefly after a lost commit race, with jitter growing per
-    attempt.  Without it the retry loop re-reads the log and re-creates
+    attempt.  Without it ``_publish`` re-reads the log and re-creates
     within ~100 ms — a writer racing a fast opponent (e.g. a zombie
     foreachBatch overlapping a restarted streaming query, the r11 soak
     finding) can lose every attempt back-to-back and exhaust
-    max_retries even though each individual race is fair.  Jittered
-    backoff is the standard thundering-herd fix (same shape as Delta's
-    commit retry); integrity never depended on it — the exclusive
-    create already guarantees losers fail cleanly."""
+    max_retries even though each race is fair.  Integrity never
+    depended on it: the exclusive create already fails losers
+    cleanly."""
     time.sleep(random.uniform(0.02, 0.05 * (attempt + 1)))
 
 
 class CommitConflict(Exception):
     """Another writer committed this version first; retrying the SAME
-    call is safe and is what commit()'s internal loop does before
-    giving up and surfacing this."""
+    call is safe and is what ``_publish`` does before giving up and
+    surfacing this."""
 
 
 class ConcurrentModification(CommitConflict):
@@ -161,18 +164,14 @@ def _fs_read_json(jvm, fs, path_str: str):
 
 def _list_log_files(jvm, fs, ld) -> list[str]:
     """Full paths of every file in the log dir.  Local filesystems
-    (every test/driver path here) list through os.listdir — ZERO py4j
-    round trips; iterating a listStatus array from Python costs ~3
-    round trips PER FILE, the r14 scale probe's hidden O(commits)
-    driver cost.  Non-local filesystems (hdfs://, s3a://) fall back to
-    the Hadoop listing — correct, with the documented per-file py4j
-    cost (a cluster driver would run this listing JVM-side anyway)."""
-    import os as _os
-
+    list through os.listdir — ZERO py4j round trips; iterating a
+    listStatus array from Python costs ~3 round trips PER FILE, the
+    r14 scale probe's hidden O(commits) driver cost.  Non-local
+    filesystems (hdfs://, s3a://) fall back to the Hadoop listing."""
     lp = _local_path(ld.toString())
     if lp is not None:
         try:
-            return [f"{lp.rstrip('/')}/{n}" for n in _os.listdir(lp)]
+            return [f"{lp.rstrip('/')}/{n}" for n in os.listdir(lp)]
         except OSError:
             return []
     return [
@@ -336,26 +335,134 @@ def _live_dirs(entries: list[dict], version: int | None) -> list[str]:
     return live
 
 
-def stage_commit_data(df: DataFrame, path: str) -> str:
-    """Write ``df``'s data dir for a FUTURE commit/merge and return the
-    dir name (``data/<uuid>``) — the write half of ``commit`` split out
-    so callers can run it CONCURRENTLY with other jobs (guide §2.6
-    driver-thread overlap; r16, r15 VERDICT item 1: the matview/txlog
-    lifecycles ran 8-10 strictly sequential ~0.1-0.3 s jobs).
-
-    Safe by the log's own design: data dirs are invisible to readers
-    until a log record references them, so staging early changes
-    nothing observable — ``commit(..., staged_dir=...)`` /
-    ``merge_by_key(..., staged_dir=...)`` later link the dir exactly
-    where the inline write used to.  A staged dir that never gets
-    committed is identical to an aborted commit's dir: unreferenced,
-    reclaimed by ``vacuum``."""
-    cid = uuid.uuid4().hex
-    data_dir = f"data/{cid}"
-    df.write.mode("errorifexists").parquet(
-        f"{path.rstrip('/')}/{data_dir}"
+def _fs_now_ms(jvm, fs, dir_str: str) -> float:
+    """"Now" on the FILESYSTEM's clock: the mtime of a probe file
+    written (then deleted) in ``dir_str``, so grace-window ages compare
+    same-clock even on remote filesystems (s3a/hdfs) whose server time
+    is skewed from the driver.  Falls back to driver time if the probe
+    can't be written (local fs shares the clock anyway)."""
+    now_ms = time.time() * 1000.0
+    probe = jvm.org.apache.hadoop.fs.Path(
+        f"{dir_str}/.clock-probe-{uuid.uuid4().hex}"
     )
+    try:
+        fs.create(probe, True).close()
+        now_ms = float(fs.getFileStatus(probe).getModificationTime())
+        fs.delete(probe, False)
+    except Exception:
+        pass
+    return now_ms
+
+
+def _write_dir(df: DataFrame, path: str, suffix: str = "") -> str:
+    """Write ``df`` as a fresh immutable data dir and return its name
+    (``data/<uuid><suffix>``).  Invisible to readers until a log
+    record references it; an unreferenced dir (aborted commit, lost
+    merge) is reclaimed by ``vacuum``."""
+    data_dir = f"data/{uuid.uuid4().hex}{suffix}"
+    df.write.mode("errorifexists").parquet(f"{path.rstrip('/')}/{data_dir}")
     return data_dir
+
+
+#: the one driver thread staged writes run on (guide §2.6 overlap):
+#: one worker, so concurrent stagers queue in submission order
+_STAGER = ThreadPoolExecutor(max_workers=1, thread_name_prefix="txlog-stage")
+
+
+def stage_commit_data(df: DataFrame, path: str) -> Future:
+    """Start writing ``df``'s data dir for a FUTURE commit/merge on
+    txlog's staging thread and return a ``Future`` of the dir name —
+    the write half of ``commit`` split out so it overlaps the caller's
+    other jobs (r16: the matview/txlog lifecycles ran 8-10 strictly
+    sequential ~0.1-0.3 s jobs).  Pass the future as ``staged=`` to
+    ``commit``/``merge_by_key``, which link the dir exactly where the
+    inline write used to.  Safe by the log's own design: the dir is
+    invisible until a record references it, and one never committed is
+    an aborted commit's orphan, reclaimed by ``vacuum``."""
+    return _STAGER.submit(_write_dir, df, path)
+
+
+def _resolve_staged(spark: SparkSession, path: str, staged: Future) -> str:
+    """The dir a ``stage_commit_data`` future wrote, checked to still
+    exist: a dir deleted since staging must fail the commit here, not
+    every later read of the committed version."""
+    data_dir = staged.result()
+    _jvm, fs, hpath = _jfs(spark, f"{path.rstrip('/')}/{data_dir}")
+    if not fs.exists(hpath):
+        raise FileNotFoundError(f"staged dir {data_dir} missing under {path}")
+    return data_dir
+
+
+def _publish(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    dirs: list[str],
+    max_retries: int,
+    expect_live: list[str] | None = None,
+    batch_id: int | None = None,
+    stats: dict | None = None,
+) -> tuple[int, list[dict] | None]:
+    """Append one record to the log — the single publish path of
+    commit, merge_by_key and optimize.  Each attempt re-reads the log,
+    returns early on a raced replay of ``batch_id`` (someone else
+    committed that batch), aborts with ConcurrentModification if the
+    live set no longer equals ``expect_live`` (the snapshot a
+    merge/optimize computed against), allocates version = max(parsed,
+    on-disk) + 1, and creates its file exclusively; a lost race backs
+    off and retries.  The winner writes the record and checkpoints the
+    log.  Returns (version, log including the new record) — the log is
+    None on a raced replay, which published nothing."""
+    jvm, fs, _ = _jfs(spark, path)
+    last_err: Exception | None = None
+    for attempt in range(max_retries):
+        log, chk_version, _ntail = _read_log_ex(spark, path)
+        if batch_id is not None:
+            done = [e for e in log if e.get("batch_id") == batch_id]
+            if done:
+                return done[0]["version"], None
+        if expect_live is not None and _live_dirs(log, None) != expect_live:
+            # committing the stale dir list would drop the concurrent
+            # writer's data: abort, never silently lose a commit
+            raise ConcurrentModification(
+                f"concurrent commit detected on {path}: the live set "
+                f"changed since this {op}'s snapshot — re-run it against "
+                "the current table state"
+            )
+        version = max(
+            log[-1]["version"] if log else -1,
+            _max_version_on_disk(jvm, fs, path),
+        ) + 1
+        entry = {
+            "version": version,
+            "op": op,
+            "dirs": dirs,
+            "batch_id": batch_id,
+            "stats": stats or {},
+        }
+        vpath = jvm.org.apache.hadoop.fs.Path(
+            f"{_log_dir(path)}/{version:012d}.json"
+        )
+        fs.mkdirs(vpath.getParent())
+        try:
+            out = fs.create(vpath, False)  # overwrite=False: exclusive
+        except Exception as e:  # FileAlreadyExistsException et al.
+            last_err = e
+            _race_backoff(attempt)
+            continue  # lost the race: recompute version, retry
+        try:
+            out.write(
+                json.dumps({**entry, "stats": json.dumps(entry["stats"])})
+                .encode()
+            )
+        finally:
+            out.close()
+        new_log = log + [entry]
+        _maybe_checkpoint(jvm, fs, path, new_log, chk_version)
+        return version, new_log
+    raise CommitConflict(
+        f"lost {max_retries} commit races on {path}"
+    ) from last_err
 
 
 def commit(
@@ -367,15 +474,14 @@ def commit(
     stats_cols: list[str] | None = None,
     extra_stats: dict | None = None,
     auto_optimize_every: int | None = None,
-    staged_dir: str | None = None,
+    staged: Future | None = None,
 ) -> int:
     """Write ``df`` as a new commit; returns the committed version.
 
     The data files land under a fresh uuid subdir FIRST (invisible to
-    readers — nothing references them), then the version file is
-    created with the exclusive-create primitive; on a race the loser
-    gets CommitConflict from the filesystem and retries with the next
-    version number, its data dir intact.
+    readers — nothing references them), then ``_publish`` links it
+    with the exclusive-create primitive; a lost race retries on the
+    next version number, its data dir intact.
 
     ``batch_id`` makes the commit IDEMPOTENT for streaming foreachBatch
     replays: if the log already holds a commit stamped with this
@@ -403,8 +509,7 @@ def commit(
     version number, so overwrites/merges that already collapse the
     dir set never pay a redundant compaction.
 
-    ``staged_dir`` links a dir pre-written by ``stage_commit_data``
-    (possibly from another driver thread, overlapping earlier jobs)
+    ``staged`` links the dir a ``stage_commit_data`` future wrote
     instead of writing ``df`` here; ``df`` then only supplies the
     session.  With ``batch_id`` dedup the staged dir of a skipped
     replay is left unreferenced (vacuum reclaims it) — the same
@@ -412,18 +517,13 @@ def commit(
     if op not in ("append", "overwrite"):
         raise ValueError(f"op must be append|overwrite, got {op!r}")
     spark = df.sparkSession
+    data_dir = _resolve_staged(spark, path, staged) if staged else None
     if batch_id is not None:
         for e in _read_log(spark, path):
             if e.get("batch_id") == batch_id:
                 return e["version"]
-    if staged_dir is not None:
-        data_dir = staged_dir
-    else:
-        cid = uuid.uuid4().hex
-        data_dir = f"data/{cid}"
-        df.write.mode("errorifexists").parquet(
-            f"{path.rstrip('/')}/{data_dir}"
-        )
+    if data_dir is None:
+        data_dir = _write_dir(df, path)
     stats: dict = {}
     if stats_cols:
         from pyspark.sql import functions as F
@@ -440,64 +540,20 @@ def commit(
         }
     if extra_stats:
         stats.update(extra_stats)
-
-    jvm, fs, _ = _jfs(spark, path)
-    last_err: Exception | None = None
-    for attempt in range(max_retries):
-        log, chk_version, _ntail = _read_log_ex(spark, path)
-        if batch_id is not None:
-            done = [e for e in log if e.get("batch_id") == batch_id]
-            if done:  # raced replay of the same batch: someone else won
-                return done[0]["version"]
-        version = max(
-            log[-1]["version"] if log else -1,
-            _max_version_on_disk(jvm, fs, path),
-        ) + 1
-        record = json.dumps(
-            {
-                "version": version,
-                "op": op,
-                "dirs": [data_dir],
-                "batch_id": batch_id,
-                "stats": json.dumps(stats),
-            }
-        ).encode()
-        vpath = jvm.org.apache.hadoop.fs.Path(
-            f"{_log_dir(path)}/{version:012d}.json"
-        )
-        fs.mkdirs(vpath.getParent())
+    version, new_log = _publish(
+        spark, path, op, [data_dir], max_retries, batch_id=batch_id,
+        stats=stats,
+    )
+    if (
+        new_log is not None
+        and auto_optimize_every
+        and len(_live_dirs(new_log, None)) >= auto_optimize_every
+    ):
         try:
-            out = fs.create(vpath, False)  # overwrite=False: exclusive
-        except Exception as e:  # FileAlreadyExistsException et al.
-            last_err = e
-            _race_backoff(attempt)
-            continue  # lost the race: recompute version, retry
-        try:
-            out.write(record)
-        finally:
-            out.close()
-        new_log = log + [
-            {
-                "version": version,
-                "op": op,
-                "dirs": [data_dir],
-                "batch_id": batch_id,
-                "stats": stats,
-            }
-        ]
-        _maybe_checkpoint(jvm, fs, path, new_log, chk_version)
-        if (
-            auto_optimize_every
-            and len(_live_dirs(new_log, None)) >= auto_optimize_every
-        ):
-            try:
-                optimize(spark, path)
-            except (ConcurrentModification, CommitConflict):
-                pass  # a racing writer moved the table; next boundary compacts
-        return version
-    raise CommitConflict(
-        f"lost {max_retries} commit races on {path}"
-    ) from last_err
+            optimize(spark, path)
+        except (ConcurrentModification, CommitConflict):
+            pass  # a racing writer moved the table; next boundary compacts
+    return version
 
 
 def snapshot_dirs(
@@ -685,7 +741,7 @@ def merge_by_key(
     path: str,
     key: str,
     max_retries: int = 5,
-    staged_dir: str | None = None,
+    staged: Future | None = None,
 ) -> int:
     """Copy-on-write MERGE (upsert by key): rows in ``updates`` replace
     live rows with the same ``key``; unmatched update rows insert.
@@ -703,13 +759,14 @@ def merge_by_key(
     the copy-on-write trade every log-structured table format makes.
 
     Concurrency: survivors/rewrites are computed against a LOG SNAPSHOT;
-    if any other writer commits between that snapshot and this merge's
-    version-file create, blindly committing the stale survivor list
-    would silently drop the concurrent commit's dirs.  The retry loop
-    therefore re-reads the log and ABORTS with CommitConflict when the
-    live set moved — the same detect-and-abort contract Delta's
-    ConcurrentAppendException implements; the caller re-runs the merge
-    against the new snapshot."""
+    if another writer commits before this merge's version-file create,
+    committing the stale survivor list would silently drop that
+    commit's dirs, so ``_publish`` ABORTS with ConcurrentModification
+    when the live set moved — Delta's ConcurrentAppendException
+    contract; the caller re-runs the merge against the new snapshot.
+
+    ``staged`` links an updates dir a ``stage_commit_data`` future
+    wrote instead of writing ``updates`` here."""
     spark = updates.sparkSession
     from pyspark.sql import functions as F
 
@@ -719,27 +776,16 @@ def merge_by_key(
     live = _live_dirs(entries, None)
     base = path.rstrip("/")
 
-    # Write the update rows FIRST (r15, guide §1.2/§5): the old order
-    # evaluated the caller's ``updates`` lineage THREE times — once per
-    # broadcast-key build (touch probe, keep-side anti join) and once
-    # for the write.  Deriving the key set from the just-written
-    # parquet runs that lineage exactly once; the key reads are then
-    # column-pruned scans of a local file (and are CONSISTENT with the
-    # committed rows even if the caller's plan is non-deterministic).
-    # Failure semantics are unchanged: data dirs land before the log
-    # references them, so an aborted merge leaves only unreferenced
-    # dirs for vacuum, exactly as before.
-    # ``staged_dir`` (r16, guide §2.6): the caller pre-wrote the
-    # updates dir via stage_commit_data — typically from a driver
-    # thread overlapping earlier lifecycle jobs — so the write is
-    # skipped and the keys derive from the staged parquet, keeping the
-    # r15 evaluate-once/consistency property verbatim.
-    cid = uuid.uuid4().hex
-    if staged_dir is not None:
-        upd_dir = staged_dir
+    # Write the update rows FIRST (r15, guide §1.2/§5): deriving the
+    # key set from the written parquet evaluates the caller's
+    # ``updates`` lineage exactly once (not once per broadcast-key
+    # build), and the keys are CONSISTENT with the committed rows even
+    # if the caller's plan is non-deterministic.  An aborted merge
+    # leaves only unreferenced dirs for vacuum.
+    if staged is not None:
+        upd_dir = _resolve_staged(spark, path, staged)
     else:
-        upd_dir = f"data/{cid}-upd"
-        updates.write.mode("errorifexists").parquet(f"{base}/{upd_dir}")
+        upd_dir = _write_dir(updates, path, "-upd")
     keys = (
         spark.read.parquet(f"{base}/{upd_dir}").select(key).distinct()
     )
@@ -762,57 +808,15 @@ def merge_by_key(
 
     new_dirs = []
     if touched:
-        keep_dir = f"data/{cid}-keep"
-        (
-            spark.read.parquet(*[f"{base}/{d}" for d in sorted(touched)])
-            .join(F.broadcast(keys), key, "left_anti")
-            .write.mode("errorifexists")
-            .parquet(f"{base}/{keep_dir}")
-        )
-        new_dirs.append(keep_dir)
+        kept = spark.read.parquet(
+            *[f"{base}/{d}" for d in sorted(touched)]
+        ).join(F.broadcast(keys), key, "left_anti")
+        new_dirs.append(_write_dir(kept, path, "-keep"))
     new_dirs.append(upd_dir)
-
-    jvm, fs, _ = _jfs(spark, path)
-    last_err: Exception | None = None
-    for attempt in range(max_retries):
-        log = _read_log(spark, path)
-        if _live_dirs(log, None) != live:
-            # A concurrent writer committed since our snapshot: the
-            # survivor list is stale and committing it would drop that
-            # writer's data.  Abort — never silently lose a commit.
-            raise ConcurrentModification(
-                f"concurrent commit detected on {path} during merge; "
-                "live set changed since the merge snapshot — re-run "
-                "the merge against the current table state"
-            )
-        version = max(
-            log[-1]["version"] if log else -1,
-            _max_version_on_disk(jvm, fs, path),
-        ) + 1
-        record = json.dumps(
-            {
-                "version": version,
-                "op": "overwrite",
-                "dirs": survivors + new_dirs,
-            }
-        ).encode()
-        vpath = jvm.org.apache.hadoop.fs.Path(
-            f"{_log_dir(path)}/{version:012d}.json"
-        )
-        try:
-            out = fs.create(vpath, False)
-        except Exception as e:
-            last_err = e
-            _race_backoff(attempt)
-            continue
-        try:
-            out.write(record)
-        finally:
-            out.close()
-        return version
-    raise CommitConflict(
-        f"lost {max_retries} commit races on {path}"
-    ) from last_err
+    return _publish(
+        spark, path, "overwrite", survivors + new_dirs, max_retries,
+        expect_live=live,
+    )[0]
 
 
 def optimize(
@@ -825,57 +829,24 @@ def optimize(
     ``target_partitions`` files under one new dir and commit it as an
     overwrite — contents identical, small-file count collapsed.  Time
     travel to pre-compaction versions still works (old dirs remain on
-    disk until vacuum)."""
+    disk until vacuum).  Same detect-and-abort as merge_by_key: a
+    concurrent append's rows would otherwise vanish from the
+    compacted overwrite."""
     entries = _read_log(spark, path)
     if not entries:
         raise FileNotFoundError(f"no commits at {path}")
     live = _live_dirs(entries, None)
     base = path.rstrip("/")
-    cid = uuid.uuid4().hex
-    new_dir = f"data/{cid}-compact"
-    (
-        spark.read.parquet(*[f"{base}/{d}" for d in live])
-        .repartition(target_partitions)
-        .write.mode("errorifexists")
-        .parquet(f"{base}/{new_dir}")
+    new_dir = _write_dir(
+        spark.read.parquet(*[f"{base}/{d}" for d in live]).repartition(
+            target_partitions
+        ),
+        path,
+        "-compact",
     )
-    jvm, fs, _ = _jfs(spark, path)
-    last_err: Exception | None = None
-    for attempt in range(max_retries):
-        log = _read_log(spark, path)
-        if _live_dirs(log, None) != live:
-            # Same detect-and-abort as merge_by_key: a concurrent
-            # append's rows would otherwise vanish from the compacted
-            # overwrite.
-            raise ConcurrentModification(
-                f"concurrent commit detected on {path} during optimize; "
-                "live set changed since the compaction snapshot — "
-                "re-run optimize against the current table state"
-            )
-        version = max(
-            log[-1]["version"] if log else -1,
-            _max_version_on_disk(jvm, fs, path),
-        ) + 1
-        record = json.dumps(
-            {"version": version, "op": "overwrite", "dirs": [new_dir]}
-        ).encode()
-        vpath = jvm.org.apache.hadoop.fs.Path(
-            f"{_log_dir(path)}/{version:012d}.json"
-        )
-        try:
-            out = fs.create(vpath, False)
-        except Exception as e:
-            last_err = e
-            _race_backoff(attempt)
-            continue
-        try:
-            out.write(record)
-        finally:
-            out.close()
-        return version
-    raise CommitConflict(
-        f"lost {max_retries} commit races on {path}"
-    ) from last_err
+    return _publish(
+        spark, path, "overwrite", [new_dir], max_retries, expect_live=live
+    )[0]
 
 
 def heal_log_gaps(
@@ -900,34 +871,23 @@ def heal_log_gaps(
 
     This is the matching MAINTENANCE operation, with vacuum's exact
     grace contract: an empty version file older than
-    ``min_age_seconds`` (measured against the filesystem's clock, same
-    probe-file trick as vacuum) is declared dead and overwritten with
-    a no-op append record ({dirs: []}) — snapshot contents, time
-    travel, and the change feed are unaffected (the no-op changes no
-    live set), the parsed prefix becomes contiguous again, and the
-    next commit's checkpoint advances past it.  Pass 0 only in a
+    ``min_age_seconds`` (on the filesystem's clock, ``_fs_now_ms``) is
+    declared dead and overwritten with a no-op append record ({dirs:
+    []}) — snapshot contents, time travel, and the change feed are
+    unaffected (the no-op changes no live set), the parsed prefix
+    becomes contiguous again, and the next commit's checkpoint
+    advances past it.  Pass 0 only in a
     single-writer maintenance window: a zombie writer that is alive
     but paused longer than the grace between create and write would
     have its eventual commit silently shadowed — the same
     impossible-to-distinguish case vacuum's grace exists for."""
-    import time as _time
-
     jvm, fs, _ = _jfs(spark, path)
     entries = _read_log(spark, path)
     parsed = {e["version"] for e in entries}
     mx_disk = _max_version_on_disk(jvm, fs, path)
     if mx_disk < 0:
         return []
-    now_ms = _time.time() * 1000.0
-    probe = jvm.org.apache.hadoop.fs.Path(
-        f"{_log_dir(path)}/.heal-probe-{uuid.uuid4().hex}"
-    )
-    try:
-        fs.create(probe, True).close()
-        now_ms = float(fs.getFileStatus(probe).getModificationTime())
-        fs.delete(probe, False)
-    except Exception:
-        pass  # driver-clock fallback (local fs shares the clock anyway)
+    now_ms = _fs_now_ms(jvm, fs, _log_dir(path))
     healed: list[int] = []
     for v in range(0, mx_disk + 1):
         if v in parsed:
@@ -976,22 +936,16 @@ def vacuum(
     — same contract as Delta's VACUUM).
 
     ``min_age_seconds`` is the retention grace (Delta's
-    retentionDurationCheck): commit() writes its data dir BEFORE its
-    version file, so a dir absent from the log may be an IN-FLIGHT
-    commit, not garbage — deleting it would let that commit succeed
+    retentionDurationCheck): commit() writes (or stages) its data dir
+    BEFORE its version file, so a dir absent from the log may be an
+    IN-FLIGHT commit, not garbage — deleting it would let that commit succeed
     pointing at vanished data.  Dirs whose modification time is within
     the grace window are never deleted; pass 0 only when no concurrent
     writer can exist (single-writer maintenance window).
 
-    Age is measured against the FILESYSTEM's clock, not the driver's:
-    "now" is the mtime of a probe file written just before the sweep,
-    so the grace comparison is same-clock even on remote filesystems
-    (s3a/hdfs) whose server time is skewed from the driver — a skewed
-    driver wall-clock could otherwise under-estimate a fresh in-flight
-    commit dir's age and delete it.  Falls back to driver time if the
-    probe can't be written."""
-    import time as _time
-
+    Age is measured against the FILESYSTEM's clock (``_fs_now_ms``): a
+    skewed driver wall-clock could otherwise under-estimate a fresh
+    in-flight commit dir's age and delete it."""
     entries = _read_log(spark, path)
     if not entries:
         return 0
@@ -1006,16 +960,7 @@ def vacuum(
     removed = 0
     if not fs.exists(data_root):
         return 0
-    now_ms = _time.time() * 1000.0
-    probe = jvm.org.apache.hadoop.fs.Path(
-        f"{base}/data/.vacuum-probe-{uuid.uuid4().hex}"
-    )
-    try:
-        fs.create(probe, True).close()
-        now_ms = float(fs.getFileStatus(probe).getModificationTime())
-        fs.delete(probe, False)
-    except Exception:
-        pass  # driver-clock fallback (local fs shares the clock anyway)
+    now_ms = _fs_now_ms(jvm, fs, f"{base}/data")
     for st in fs.listStatus(data_root):
         d = f"data/{st.getPath().getName()}"
         if d in reachable:

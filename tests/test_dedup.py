@@ -26,10 +26,13 @@ def test_cc_chain_label_propagation_matches_unionfind(spark):
     path (local_threshold=0) on a CHAIN graph — the worst case for
     O(diameter) convergence (a 60-node path needs the most min-label
     hops per merge round) — and assert exact parity with the
-    union-find fast path on the same edges."""
+    union-find fast path on the same edges.  Edges with a NULL
+    endpoint are dropped by both paths (no null node, which the local
+    path would otherwise confuse with its overflow sentinel)."""
     n = 60
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(n - 1)] + [(None, 5), (7, None)],
+        "id_a long, id_b long",
     )
     via_lp = _comp_map(
         connected_components(edges, local_threshold=0, max_iter=100)

@@ -439,12 +439,10 @@ def test_txlog_merge_rewrites_only_touched_files(spark, tmp_path):
 
 def test_txlog_staged_commit_and_merge(spark, tmp_path):
     """r16 lifecycle-overlap internals (guide §2.6): data dirs staged
-    ahead by ``stage_commit_data`` — possibly from another driver
-    thread — are invisible until a commit/merge references them, and
-    ``commit(staged_dir=...)`` / ``merge_by_key(staged_dir=...)``
-    produce exactly the table the inline-write path produced."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    ahead by ``stage_commit_data`` on txlog's driver thread are
+    invisible until a commit/merge references them, and
+    ``commit(staged=...)`` / ``merge_by_key(staged=...)`` produce
+    exactly the table the inline-write path produced."""
     from dask_cudf_spark.sources.txlog import (
         _read_log,
         commit,
@@ -458,19 +456,18 @@ def test_txlog_staged_commit_and_merge(spark, tmp_path):
     upd = spark.createDataFrame(
         [(2, "B2"), (9, "new")], "k long, v string"
     )
-    # stage both dirs concurrently (the query-level overlap pattern)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(stage_commit_data, d1.coalesce(1), path)
-        f2 = pool.submit(stage_commit_data, upd.coalesce(1), path)
-        base_dir, upd_dir = f1.result(), f2.result()
+    # stage both dirs up front (the query-level overlap pattern)
+    f1 = stage_commit_data(d1.coalesce(1), path)
+    f2 = stage_commit_data(upd.coalesce(1), path)
+    base_dir, upd_dir = f1.result(), f2.result()
     # nothing is committed yet: staged dirs are invisible (no log)
     assert _read_log(spark, path) == []
-    assert commit(d1, path, "append", staged_dir=base_dir) == 0
+    assert commit(d1, path, "append", staged=f1) == 0
     # v0 sees ONLY the committed dir, not the still-staged updates
     assert {
         (r["k"], r["v"]) for r in read_snapshot(spark, path).collect()
     } == {(1, "a"), (2, "b")}
-    v = merge_by_key(upd, path, "k", staged_dir=upd_dir)
+    v = merge_by_key(upd, path, "k", staged=f2)
     assert v == 1
     assert {
         (r["k"], r["v"]) for r in read_snapshot(spark, path).collect()
@@ -481,6 +478,62 @@ def test_txlog_staged_commit_and_merge(spark, tmp_path):
     assert upd_dir in log[1]["dirs"]
     # time travel to the pre-merge snapshot still works
     assert read_snapshot(spark, path, version=0).count() == 2
+
+
+def test_txlog_staged_write_validated_before_linking(spark, tmp_path):
+    """A staged dir deleted before its commit (e.g. by a grace-less
+    vacuum) must fail the commit with FileNotFoundError naming the dir
+    and leave the log untouched — never link a missing dir."""
+    import shutil
+
+    import pytest
+
+    from dask_cudf_spark.sources.txlog import (
+        _read_log,
+        commit,
+        merge_by_key,
+        stage_commit_data,
+    )
+
+    path = str(tmp_path / "txstagedgone")
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    commit(df, path, "append")
+    before = _read_log(spark, path)
+    for call in (
+        lambda fut: commit(df, path, "append", staged=fut),
+        lambda fut: merge_by_key(df, path, "k", staged=fut),
+    ):
+        fut = stage_commit_data(df, path)
+        shutil.rmtree(f"{path}/{fut.result()}")
+        with pytest.raises(FileNotFoundError, match=fut.result()):
+            call(fut)
+        assert _read_log(spark, path) == before
+
+
+def test_txlog_vacuum_reclaims_uncommitted_staged_write(spark, tmp_path):
+    """A staged dir that is never committed is an orphan like an
+    aborted commit's: vacuum(min_age_seconds=0) removes it and the
+    live snapshot is unchanged."""
+    import os
+
+    from dask_cudf_spark.sources.txlog import (
+        commit,
+        read_snapshot,
+        stage_commit_data,
+        vacuum,
+    )
+
+    path = str(tmp_path / "txstagedorphan")
+    commit(spark.createDataFrame([(1,), (2,)], "k long"), path, "append")
+    orphan = stage_commit_data(
+        spark.createDataFrame([(3,)], "k long"), path
+    ).result()
+    assert os.path.isdir(f"{path}/{orphan}")
+    before = sorted(r["k"] for r in read_snapshot(spark, path).collect())
+    assert vacuum(spark, path, min_age_seconds=0) == 1
+    assert not os.path.exists(f"{path}/{orphan}")
+    after = sorted(r["k"] for r in read_snapshot(spark, path).collect())
+    assert after == before == [1, 2]
 
 
 def test_txlog_optimize_and_vacuum(spark, tmp_path):
@@ -1223,6 +1276,45 @@ def test_txlog_checkpoint_read_path_used(spark, tmp_path, monkeypatch):
     assert chk_v2 == chk_v
     assert [(e["version"], e["op"]) for e in entries2] == before
     assert txlog.read_snapshot(spark, path).count() == 5
+
+
+def test_txlog_merges_checkpoint_the_log(spark, tmp_path, monkeypatch):
+    """merge_by_key publishes through the same path as commit, so a
+    merge-only table checkpoints its log too (reads stay O(interval),
+    not O(merges)).  The checkpointed snapshot must equal the pure
+    per-file replay with every checkpoint moved aside."""
+    from dask_cudf_spark.sources import txlog
+
+    monkeypatch.setattr(txlog, "CHECKPOINT_INTERVAL", 2)
+    path = str(tmp_path / "chkmerge")
+    txlog.commit(
+        spark.createDataFrame([(i, 0) for i in range(4)], "k long, v long"),
+        path,
+    )
+    for i in range(1, 6):
+        upd = spark.createDataFrame(
+            [(i % 4, i), (10 + i, i)], "k long, v long"
+        )
+        assert txlog.merge_by_key(upd, path, "k") == i
+    logdir = tmp_path / "chkmerge" / "_txlog"
+    chks = [p for p in logdir.iterdir() if p.name.startswith("chk-")]
+    assert chks, "merges never checkpointed the log"
+    assert txlog._read_log_ex(spark, path)[1] >= 1
+
+    def rows():
+        return sorted(
+            (r["k"], r["v"])
+            for r in txlog.read_snapshot(spark, path).collect()
+        )
+
+    with_chk = rows()
+    for p in chks:
+        p.rename(p.with_suffix(".bak"))
+    assert txlog._read_log_ex(spark, path)[1] == -1
+    assert rows() == with_chk
+    assert dict(with_chk) == {
+        0: 4, 1: 5, 2: 2, 3: 3, 11: 1, 12: 2, 13: 3, 14: 4, 15: 5
+    }
 
 
 def test_txlog_two_process_race_across_checkpoint_boundary(
